@@ -16,8 +16,8 @@ layer from Spark's event log. The last line of standard output is the JSON
 result record; a line starting with ``perfbench-detail`` before it holds
 the samples, input statistics and environment.
 
-    python3 perfbench/run.py --suite [--runs 3]   # every kept workload
-    python3 perfbench/run.py --smoke              # tiny self-test
+    python3 perfbench/run.py --suite    # every kept workload, 11 runs each
+    python3 perfbench/run.py --smoke    # tiny self-test
 
 Everything a run writes lives under ``.perfbench_work/`` in the working
 directory and is removed when the run ends.
@@ -48,7 +48,7 @@ sys.path.insert(0, str(BENCH))
 
 CORES = 4
 HEAP = "3g"
-SETUPS = 3  # session starts per run, see setup()
+SUITE_RUNS = 11  # runs per workload for --suite: the least with a high percentile
 MB = 1 << 20
 
 LAYERS = (
@@ -196,8 +196,6 @@ class Session:
     def start(self):
         from bop_consus_importing_rdf_spark.session import get_spark
 
-        if self.spark is not None:
-            self.spark.stop()
         self.spark = get_spark("perfbench", cores=CORES)
         self.spark.sparkContext.setLogLevel("ERROR")
         return self.spark
@@ -337,23 +335,20 @@ def generic_warmup(spark) -> None:
 
 
 def setup(session: Session, wl, work: str) -> tuple[float, dict]:
-    """``SETUPS`` session starts (each with the generic warm-up), then one
-    warm-up of the workload itself on its tiny input. ``setup_s`` is the
-    median session start plus the workload warm-up: the first session
-    start pays the JVM launch, the workload warm-up pays the first-run
-    penalty (JIT, generated-code caches) the timed runs then do not."""
-    starts = []
-    for _ in range(SETUPS):
-        t = time.perf_counter()
-        generic_warmup(session.start())
-        starts.append(time.perf_counter() - t)
+    """One session start (the JVM launch included) with the generic
+    warm-up, then one warm-up of the workload itself on its small input.
+    ``setup_s`` is the sum: the workload warm-up pays the first-run penalty
+    (JIT, generated-code caches) the timed runs then do not."""
+    t = time.perf_counter()
+    generic_warmup(session.start())
+    start = time.perf_counter() - t
     t = time.perf_counter()
     out = os.path.join(work, "warm")
     wl.warmup(session.spark, out)
     reset(session.spark)
     warm = time.perf_counter() - t
     shutil.rmtree(out, ignore_errors=True)
-    return statistics.median(starts) + warm, {"session_start_s": starts, "workload_warmup_s": warm}
+    return start + warm, {"session_start_s": start, "workload_warmup_s": warm}
 
 
 def measure(session: Session, wl, work: str, seconds: float) -> tuple[dict, dict]:
@@ -624,23 +619,27 @@ def child(workload: str, seed: int, seconds: float, trace: int, size: str = "ful
     return result, detail
 
 
-def suite(runs: int) -> int:
+def suite() -> int:
+    """``SUITE_RUNS`` runs of every kept workload, seeds 1 up, then one
+    traced run of each."""
     sp, bad = spec(), 0
     for w in (x["name"] for x in sp["workloads"]):
         samples, units, attempted, failed = defaultdict(list), {}, 0, 0
-        for seed in range(1, runs + 1):
+        for seed in range(1, SUITE_RUNS + 1):
             result, detail = child(w, seed, sp["run_seconds"], 0)
             attempted += detail["attempted"] if detail else 1
             failed += detail["failed"] if detail else 1
             if result is None:
+                print(f"  {w} seed {seed}: failed", flush=True)
                 continue
+            print(f"  {w} seed {seed}: " + " ".join(f"{k}={m['value']:.6g}" for k, m in result["metrics"].items()), flush=True)
             for k, m in result["metrics"].items():
                 units[k] = m["unit"]
                 samples[k] += detail["wall_s"] if k == "wall_s" else [m["value"]]
             samples["peak_rss_mb"].append(detail["peak_rss_mb"])
             units["peak_rss_mb"] = "MB"
         if samples:
-            print_e2e(f"{w} ({runs} runs)", samples, units, attempted, failed)
+            print_e2e(f"{w} ({SUITE_RUNS} runs)", samples, units, attempted, failed)
         result, _detail = child(w, 1, sp["run_seconds"], 1)
         if result is None:
             failed += 1
@@ -696,13 +695,12 @@ def main() -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--size", choices=("full", "tiny"), default="full")
     ap.add_argument("--suite", action="store_true", help="run every kept workload and print the summary")
-    ap.add_argument("--runs", type=int, default=3, help="runs per workload for --suite")
     ap.add_argument("--smoke", action="store_true", help="tiny self-test of every workload")
     args = ap.parse_args()
     if args.smoke:
         return smoke()
     if args.suite:
-        return suite(args.runs)
+        return suite()
     if not args.workload:
         ap.error("--workload, --suite or --smoke is required")
     return run_one(args)
