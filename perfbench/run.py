@@ -6,15 +6,16 @@ One run, from the root of a checkout:
     python3 perfbench/run.py --workload harvest_large --seed 1 --seconds 10 --trace 0
 
 generates the workload's inputs from the seed, starts a ``local[4]``
-session through the package's own session factory, warms it up, then calls
-the workload's production entry point (``harvest.run_harvest``,
+session through the package's own session factory, then calls the
+workload's production entry point (``harvest.run_harvest``,
 ``plans.resume.run_resumable`` or ``kg.pipeline.build_kg``) back to back
-for ``--seconds`` seconds, checking every committed output against the
-generator's prediction. ``--trace 1`` instead makes one untraced call and
-one layer-by-layer traced replica of it, and splits time and bytes by
-layer from Spark's event log. The last line of standard output is the JSON
-result record; a line starting with ``perfbench-detail`` before it holds
-the samples, input statistics and environment.
+for ``--seconds`` seconds (one call at least), checking every committed
+output against the generator's prediction. ``--trace 1`` instead makes one
+warm-up call, one untraced call and one layer-by-layer traced replica of
+it, and splits time and bytes by layer from Spark's event log. The last
+line of standard output is the JSON result record; a line starting with
+``perfbench-detail`` before it holds the samples, input statistics and
+environment.
 
     python3 perfbench/run.py --suite    # every kept workload, 11 runs each
     python3 perfbench/run.py --smoke    # tiny self-test
@@ -319,43 +320,17 @@ def timed_call(fn, spark, out: str) -> tuple[float, dict | None, list[str]]:
         return time.perf_counter() - t, None, [traceback.format_exc()]
 
 
-def generic_warmup(spark) -> None:
-    """One SQL job and one Arrow Python UDF job: JVM code paths and the
-    Python worker daemon of a fresh session."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def plus_one(s):
-        return s + 1
-
-    # real classes, not the postponed (string) annotations of this module
-    plus_one.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(plus_one, "long")
-    spark.range(1000).select(udf("id").alias("x")).agg(F.sum("x")).collect()
-
-
-def setup(session: Session, wl, work: str) -> tuple[float, dict]:
-    """One session start (the JVM launch included) with the generic
-    warm-up, then one warm-up of the workload itself on its small input.
-    ``setup_s`` is the sum: the workload warm-up pays the first-run penalty
-    (JIT, generated-code caches) the timed runs then do not."""
-    t = time.perf_counter()
-    generic_warmup(session.start())
-    start = time.perf_counter() - t
-    t = time.perf_counter()
-    out = os.path.join(work, "warm")
-    wl.warmup(session.spark, out)
-    reset(session.spark)
-    warm = time.perf_counter() - t
-    shutil.rmtree(out, ignore_errors=True)
-    return start + warm, {"session_start_s": start, "workload_warmup_s": warm}
-
-
 def measure(session: Session, wl, work: str, seconds: float) -> tuple[dict, dict]:
     import checks
 
-    setup_s, setup_detail = setup(session, wl, work)
-    spark = session.spark
+    # set-up is the session start, the JVM launch included. The workload is
+    # not warmed up: harvest.py and job.py each start a session and make
+    # one call, so a user pays the first call's code generation and JIT on
+    # every run; and a warm-up call costs as much as the timed call, which
+    # the run budget cannot hold.
+    t = time.perf_counter()
+    spark = session.start()
+    setup_s = time.perf_counter() - t
     env = environment(spark)
     walls, out_mb, cached, failures, infos = [], [], [], [], []
     out = os.path.join(work, "out")
@@ -382,7 +357,6 @@ def measure(session: Session, wl, work: str, seconds: float) -> tuple[dict, dict
     attempted = len(walls) + len(failures)
     detail = {
         "env": env,
-        "setup": setup_detail,
         "wall_s": walls,
         "output_mb": out_mb,
         "cached_mb_after_run": cached,
@@ -411,17 +385,19 @@ def traced(session: Session, wl, work: str) -> tuple[dict, dict]:
     t = time.perf_counter()
     spark = session.start()
     tracer = Tracer(spark.sparkContext)
+    out = os.path.join(work, "out")
+    # set-up with one warm-up call of the workload, so that the untraced
+    # and the traced call below both run warm and their difference is the
+    # tracing overhead
     with tracer.layer("session"):
-        generic_warmup(spark)
-        wl.warmup(spark, os.path.join(work, "warm"))
+        warm_problems = timed_call(wl.run, spark, out)[2]
         reset(spark)
     session_wall = time.perf_counter() - t
     env = environment(spark)
 
-    # the untraced production call (and, for the resume job, one plain
-    # build_kg over the same corpus) is one attempt, the traced replica
-    # the other
-    out = os.path.join(work, "out")
+    # the warm-up call is one attempt, the untraced production call (and,
+    # for the resume job, one plain build_kg over the same corpus) another,
+    # the traced replica the third
     untraced, info, problems = timed_call(wl.run, spark, out)
     problems = problems or wl.check(out, info)
     cached_after = reset(spark)
@@ -431,7 +407,7 @@ def traced(session: Session, wl, work: str) -> tuple[dict, dict]:
         problems += more
         reset(spark)
         untraced += resume_baseline
-    failures = [problems] if problems else []
+    failures = [p for p in (warm_problems, problems) if p]
 
     t = time.perf_counter()
     try:
@@ -480,8 +456,8 @@ def traced(session: Session, wl, work: str) -> tuple[dict, dict]:
         metrics[k] = (v, unit)
     detail = {
         "env": env,
-        "attempted": 2,
-        "failed": min(2, len(failures)),
+        "attempted": 3,
+        "failed": min(3, len(failures)),
         "failures": failures,
         "info": info,
         "event_log_layers": folded,

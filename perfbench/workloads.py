@@ -3,9 +3,7 @@ and the layer-by-layer traced replica of that call.
 
 Each workload generates its inputs from the seed (``prepare``), calls one
 production entry point on them (``run``) and checks what it committed
-(``check``). ``warmup`` runs the same entry point on a tiny input generated
-from the same seed, so JIT compilation, generated-code caches and Python
-workers are warm before anything is timed. ``traced`` calls the public
+(``check``). ``traced`` calls the public
 functions of each layer in the order the entry point calls them, inside
 ``tracer.layer(...)`` spans; its outputs are checked like the production
 call's.
@@ -26,11 +24,9 @@ LAYOUT_SWITCH = 20_000  # run_harvest's auto datasets layout threshold
 class Harvest:
     """``harvest.run_harvest`` over one generated N-Triples catalogue."""
 
-    def __init__(self, name: str, work: str, seed: int, n_datasets: int, warm_datasets: int):
-        self.name, self.seed = name, seed
-        self.n_datasets, self.warm_datasets = n_datasets, warm_datasets
+    def __init__(self, name: str, work: str, seed: int, n_datasets: int):
+        self.name, self.seed, self.n_datasets = name, seed, n_datasets
         self.input = os.path.join(work, "input", "catalogue.nt")
-        self.warm_input = os.path.join(work, "input", "warm.nt")
 
     def prepare(self) -> dict:
         os.makedirs(os.path.dirname(self.input), exist_ok=True)
@@ -39,14 +35,7 @@ class Harvest:
         self.exp = gen_harvest.expected(cat, CATALOGUE)
         self.input_rows = self.exp["summary"]["n_statements"]
         self.layout = "partitioned" if self.exp["summary"]["n_datasets"] <= LAYOUT_SWITCH else "parquet"
-        gen_harvest.write_nt(gen_harvest.generate(self.warm_datasets, self.seed), self.warm_input)
         return self.exp["stats"]
-
-    def warmup(self, spark, out: str) -> None:
-        import harvest
-
-        # the layout the timed run takes, so the warm-up compiles its sink
-        harvest.run_harvest(spark, self.warm_input, out, CATALOGUE, datasets_layout=self.layout)
 
     def run(self, spark, out: str) -> dict:
         import harvest
@@ -224,40 +213,33 @@ class KG:
     """Common part of the two KG workloads: a generated transcript table
     and gazetteer, written as parquet."""
 
-    def __init__(self, name, work, seed, n_entities, n_conv, warm_entities, warm_conv):
+    def __init__(self, name, work, seed, n_entities, n_conv):
         self.name, self.seed = name, seed
-        self.sizes = (n_entities, n_conv, warm_entities, warm_conv)
+        self.sizes = (n_entities, n_conv)
         d = os.path.join(work, "input")
         self.tr, self.al = os.path.join(d, "transcripts.parquet"), os.path.join(d, "aliases.parquet")
-        self.warm_tr, self.warm_al = os.path.join(d, "warm_tr.parquet"), os.path.join(d, "warm_al.parquet")
 
     def prepare(self) -> dict:
-        n_entities, n_conv, warm_entities, warm_conv = self.sizes
+        n_entities, n_conv = self.sizes
         os.makedirs(os.path.dirname(self.tr), exist_ok=True)
         g = gen_kg.gazetteer(n_entities, self.seed)
         rows = gen_kg.transcripts(n_conv, g, self.seed)
         gen_kg.write_parquet(rows, g, self.tr, self.al)
         self.exp = gen_kg.expected(rows, g)
         self.input_rows = len(rows)
-        wg = gen_kg.gazetteer(warm_entities, self.seed)
-        gen_kg.write_parquet(gen_kg.transcripts(warm_conv, wg, self.seed), wg, self.warm_tr, self.warm_al)
         return self.exp["stats"]
 
-    def _read(self, spark, warm: bool = False):
-        tr, al = (self.warm_tr, self.warm_al) if warm else (self.tr, self.al)
-        return spark.read.parquet(tr), spark.read.parquet(al)
+    def _read(self, spark):
+        return spark.read.parquet(self.tr), spark.read.parquet(self.al)
 
 
 class KGTranscripts(KG):
-    """``plans.resume.run_resumable`` at job.py's default bucket count over
-    a transcript table with a broadcast-scale gazetteer."""
+    """``plans.resume.run_resumable`` over a transcript table with a
+    broadcast-scale gazetteer, at 4 buckets rather than job.py's default
+    16: a bucket costs a near-fixed ~2.5 s of Spark jobs on a 4-vCPU host,
+    so 16 buckets take 40 s or more a call, too long for the run budget."""
 
-    N_BUCKETS = 16  # job.py --n-buckets default
-
-    def warmup(self, spark, out: str) -> None:
-        from bop_consus_importing_rdf_spark.plans.resume import run_resumable
-
-        run_resumable(spark, *self._read(spark, warm=True), out, n_buckets=2)
+    N_BUCKETS = 4
 
     def run(self, spark, out: str) -> dict:
         from bop_consus_importing_rdf_spark.kg.mentions import pick_extraction_engine
@@ -351,23 +333,21 @@ class KGTranscripts(KG):
 
 class KGGazetteer(KG):
     """One ``kg.pipeline.build_kg`` call, four outputs written, with a
-    gazetteer above its 50k-row broadcast threshold."""
+    gazetteer above its broadcast threshold. The threshold is passed as
+    ``small_dim_threshold``, lowered from the 50k-row default so that a call
+    fits the run budget; the at-scale branch it selects is the same."""
 
-    THRESHOLD = 50_000  # build_kg's small_dim_threshold default
-
-    def warmup(self, spark, out: str) -> None:
-        from bop_consus_importing_rdf_spark.kg.pipeline import build_kg
-
-        # the tiny gazetteer takes the at-scale branch like the timed run
-        _write_kg(build_kg(spark, *self._read(spark, warm=True), small_dim_threshold=10), out)
+    def __init__(self, name, work, seed, n_entities, n_conv, threshold):
+        super().__init__(name, work, seed, n_entities, n_conv)
+        self.threshold = threshold
 
     def run(self, spark, out: str) -> dict:
         from bop_consus_importing_rdf_spark.kg.pipeline import build_kg
 
-        _write_kg(build_kg(spark, *self._read(spark)), out)
+        _write_kg(build_kg(spark, *self._read(spark), small_dim_threshold=self.threshold), out)
         # past the threshold build_kg extracts with the join matcher; no
         # regex engine is picked
-        return {"branch": "at-scale" if self.exp["stats"]["gazetteer_rows"] > self.THRESHOLD else "broadcast"}
+        return {"branch": "at-scale" if self.exp["stats"]["gazetteer_rows"] > self.threshold else "broadcast"}
 
     def check(self, out: str, info: dict) -> list[str]:
         problems: list[str] = []
@@ -395,8 +375,8 @@ class KGGazetteer(KG):
             n_turns = turns.count()
         tracer.rows("kg.pipeline.stable_turns", n_turns)
         with tracer.layer("kg.pipeline.canonicalize"):
-            small = len(aliases.take(self.THRESHOLD + 1)) <= self.THRESHOLD
-            canon = kgp.canonical_entity_map(aliases, self.THRESHOLD, small=small).persist()
+            small = len(aliases.take(self.threshold + 1)) <= self.threshold
+            canon = kgp.canonical_entity_map(aliases, self.threshold, small=small).persist()
             n_entities = canon.count()
         tracer.rows("kg.pipeline.canonicalize", n_entities)
         # blocking's counts, outside every layer span: candidate pairs from
@@ -434,13 +414,14 @@ def make(name: str, work: str, seed: int, size: str):
     """Workload ``name`` at ``size`` ("full", or "tiny" for the smoke test)."""
     tiny = size == "tiny"
     if name == "harvest_large":
-        return Harvest(name, work, seed, 300 if tiny else 21_000, 150 if tiny else 3_000)
+        return Harvest(name, work, seed, 300 if tiny else 21_000)
     if name == "harvest_small":
-        return Harvest(name, work, seed, 60 if tiny else 2_000, 60 if tiny else 200)
+        return Harvest(name, work, seed, 60 if tiny else 2_000)
     if name == "kg_transcripts":
-        return KGTranscripts(name, work, seed, 200 if tiny else 250, 40 if tiny else 1_000, 200, 40)
+        return KGTranscripts(name, work, seed, 200 if tiny else 250, 40 if tiny else 1_000)
     if name == "kg_gazetteer":
-        return KGGazetteer(name, work, seed, 300 if tiny else 50_500, 40 if tiny else 300, 300, 40)
+        # 10,000 entities draw ~10,600 gazetteer rows, past the threshold
+        return KGGazetteer(name, work, seed, 300 if tiny else 10_000, 40 if tiny else 300, 200 if tiny else 10_000)
     raise SystemExit(f"unknown workload {name!r}")
 
 
